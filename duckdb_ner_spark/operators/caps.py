@@ -6,8 +6,9 @@ dedup.py, multimodal.py, and similarity.py can all import it without cycles
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Salt fan-out for the two-level min-k cap below. 64 salts bound the largest
 # single aggregation buffer at max(|bucket|/64, 64·cap) elements — a 10⁶-doc
@@ -21,7 +22,7 @@ def capped_bucket_id_arrays(
     id_col: str,
     cap: int,
     keys: tuple[str, ...] = ("band", "sig"),
-    salt_on=None,
+    salt_on: Column | None = None,
 ) -> DataFrame:
     """Each (band, sig) bucket's `cap` smallest ids as ONE sorted-ascending
     array column ``__ids__`` — BOUNDED-STATE (VERDICT r6 #2, replacing the
@@ -46,11 +47,17 @@ def capped_bucket_id_arrays(
     ``salt_on``: integer column used for the level-1 salt when ``id_col``
     itself is not directly salt-able (e.g. a struct whose FIRST field is the
     distinct integer key, so struct order == key order — q_record_linkage
-    carries the payload name through the cap this way). Defaults to the id
-    column itself; the survivor set is identical for any salt assignment."""
-    salt = ((salt_on if salt_on is not None else F.col(id_col)) % N_CAP_SALTS).alias(
-        "__salt__"
-    )
+    carries the payload name through the cap this way; a salt that is not
+    the struct's first field is refused). Defaults to the id column itself;
+    the survivor set is identical for any salt assignment."""
+    if salt_on is None:
+        salt_on = F.col(id_col)
+    else:
+        id_type = bands.schema[id_col].dataType
+        assert not isinstance(id_type, StructType) or (
+            bands.select(salt_on).columns == [id_type.fields[0].name]
+        ), f"salt_on must be the FIRST field of struct {id_col!r}"
+    salt = (salt_on % N_CAP_SALTS).alias("__salt__")
     lvl1 = bands.groupBy(*keys, salt).agg(
         F.slice(F.array_sort(F.collect_list(id_col)), 1, cap).alias("__ids__")
     )

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.cachereg import memo, stage
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 
@@ -641,23 +642,17 @@ _IVFPQ_ORACLE = f"""
 """
 
 
-# One core per (session, sf_dir): both q_ivf_pq and q_nprobe_sweep score
-# over the identical trained index; cleared by cachereg.release_caches.
-_IVFPQ_CORE_CACHE: dict = {}
-
-
 def _ivfpq_scores(spark: SparkSession, sf_dir: str):
-    """Build (d_res, dqc, top_true) for the IVF-PQ family: trained cells,
+    """(d_res, dqc, top_true) for the IVF-PQ family: trained cells,
     residual codes, per-(query, cell) residual-ADC scores carrying the
     cell, exact query->centroid routing distances, and the exact top-k
-    ground truth. See q_ivf_pq's docstring for the scale story."""
-    key = (id(spark), sf_dir)
-    hit = _IVFPQ_CORE_CACHE.get(key)
-    # id() can be reused after GC and a stopped session keeps its id: only
-    # serve a hit whose stored session IS this live object (the _PLAN_CACHE
-    # idiom), else the cached frames may bind a dead SparkContext.
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    ground truth. See q_ivf_pq's docstring for the scale story. One core
+    per session: q_ivf_pq and q_nprobe_sweep score over the identical
+    trained index; cleared by cachereg.release_caches."""
+    return memo(spark, ("ivfpq_core", sf_dir), lambda: _build_ivfpq_core(spark, sf_dir))
+
+
+def _build_ivfpq_core(spark: SparkSession, sf_dir: str):
     t = load_tables(spark, sf_dir)
     emb = t.embeddings
     n = emb.count()
@@ -755,20 +750,15 @@ def _ivfpq_scores(spark: SparkSession, sf_dir: str):
     # index SUMMARY, never the corpus) and every consumer branch becomes
     # a parquet scan. Values are BIGINT end-to-end: the round-trip is
     # bit-exact, hashes unchanged (re-attested at all 3 SFs).
-    from .layout_queries import _scratch
-
-    staged = []
-    for nm, df in (("d_res", d_res), ("dqc", dqc), ("top_true", top_true)):
-        path = _scratch(f"ivfpq_{nm}", sf_dir)
-        df.write.mode("overwrite").parquet(path)
-        staged.append(spark.read.parquet(path))
+    staged = tuple(
+        stage(spark, f"ivfpq_{nm}", sf_dir, df)
+        for nm, df in (("d_res", d_res), ("dqc", dqc), ("top_true", top_true))
+    )
     # the scored stream lives in scratch now — drop the builder persists
     d_res.unpersist()
     rex.unpersist()
     ex.unpersist()
-    out = tuple(staged)
-    _IVFPQ_CORE_CACHE[key] = (spark, out)
-    return out
+    return staged
 
 
 @declared("q_ivf_pq", oracle=_IVFPQ_ORACLE)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.cachereg import memo, stage
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 
@@ -364,28 +365,18 @@ def q_substring_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One staged span inventory per (session, sf_dir): the inventory job runs
-# once and BOTH registry consumers (q_substring_dedup's rollup report,
-# q_substring_scrub's apply) read the staged parquet — exactly the Lee et
-# al. production pipeline shape (inventory job -> apply job). BIGINT
-# columns round-trip bit-exact. Cleared by cachereg.release_caches.
-_SSD_SPANS_CACHE: dict = {}
-
-
 def staged_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    hit = _SSD_SPANS_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    from .layout_queries import _scratch
+    """One staged span inventory per session: the inventory job runs once
+    and BOTH registry consumers (q_substring_dedup's rollup report,
+    q_substring_scrub's apply) read the staged parquet — exactly the Lee
+    et al. production pipeline shape (inventory job -> apply job). BIGINT
+    columns round-trip bit-exact."""
 
-    t = load_tables(spark, sf_dir)
-    spans = substring_excise_spans(t.documents, SSD_K)
-    path = _scratch("ssd_spans", sf_dir)
-    spans.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    _SSD_SPANS_CACHE[key] = (spark, out)
-    return out
+    def build() -> DataFrame:
+        spans = substring_excise_spans(load_tables(spark, sf_dir).documents, SSD_K)
+        return stage(spark, "ssd_spans", sf_dir, spans)
+
+    return memo(spark, ("ssd_spans", sf_dir), build)
 
 
 _SUBSTRING_SCRUB_ORACLE = f"""
@@ -703,36 +694,22 @@ def _suffix_rounds_frames(
     return rounds
 
 
-# One staged rank chain per (session, sf_dir), extended lazily to the
-# deepest round any family member asks for: q_suffix_rank reads rounds
-# 0-4 (depths 1..16), q_suffix_spans additionally round 5 (depth 32).
-# Cleared by cachereg.release_caches; scratch dirs (sufr_p*) are removed
-# at interpreter exit by layout_queries._cleanup_scratch.
-_SUFR_ROUNDS_CACHE: dict = {}
-
-
 def staged_suffix_rounds(
     spark: SparkSession, sf_dir: str, n_rounds: int
 ) -> list:
-    from .layout_queries import _scratch
-
-    key = (id(spark), sf_dir)
-    ent = _SUFR_ROUNDS_CACHE.get(key)
-    have = ent[1] if ent is not None and ent[0] is spark else None
-    if have is not None and len(have) > n_rounds:
-        return have[: n_rounds + 1]
-
-    def stage(i: int, df: DataFrame) -> DataFrame:
-        p = _scratch(f"sufr_p{i}", sf_dir)
-        df.write.mode("overwrite").parquet(p)
-        return spark.read.parquet(p)
-
-    t = load_tables(spark, sf_dir)
-    rounds = _suffix_rounds_frames(
-        t.documents, n_rounds, stage=stage, rounds=have
-    )
-    _SUFR_ROUNDS_CACHE[key] = (spark, rounds)
-    return rounds[: n_rounds + 1]
+    """One staged rank chain per session, extended lazily (in place) to the
+    deepest round any family member asks for: q_suffix_rank reads rounds
+    0-4 (depths 1..16), q_suffix_spans additionally round 5 (depth 32).
+    Rounds already staged are never restaged."""
+    chain = memo(spark, ("sufr_rounds", sf_dir), list)
+    if len(chain) <= n_rounds:
+        chain[:] = _suffix_rounds_frames(
+            load_tables(spark, sf_dir).documents,
+            n_rounds,
+            stage=lambda i, df: stage(spark, f"sufr_p{i}", sf_dir, df),
+            rounds=chain or None,
+        )
+    return chain[: n_rounds + 1]
 
 
 def _doubling_ctes(n_rounds: int) -> str:
@@ -1293,8 +1270,6 @@ def suffix_adjacent_lcps(
 ) -> DataFrame:
     """(a_doc, a_pos, b_doc, b_pos, lcp) for every adjacent pair of the
     total suffix order — the LCP array of the corpus suffix array."""
-    from .layout_queries import _scratch
-
     big = SSD_POS_BIG
     t = load_tables(spark, sf_dir)
     rounds = staged_suffix_rounds(spark, sf_dir, SUFR_LCP_ROUNDS)
@@ -1379,9 +1354,7 @@ def suffix_adjacent_lcps(
         if t_step == 5:
             # stage mid-chain: bounds the lifting plan at ~6 joins per
             # segment instead of 22 in one tree (the r10 staging idiom)
-            p = _scratch("suflcp_mid", sf_dir)
-            lift.write.mode("overwrite").parquet(p)
-            lift = spark.read.parquet(p)
+            lift = stage(spark, "suflcp_mid", sf_dir, lift)
     docs = load_tables(spark, sf_dir).documents
     da = docs.select(
         F.col("doc_id").alias("a_doc"), F.col("n_chars").alias("a_len")
@@ -1406,26 +1379,17 @@ def suffix_adjacent_lcps(
     )
 
 
-# One staged LCP array per (session, sf_dir): the chain+lifting job runs
-# once and every aggregate branch of q_suffix_lcp reads the staged
-# parquet — without this the lifting lineage is COPIED into each of the
-# five consumer branches (measured 156 broadcast nodes in the un-staged
-# plan tree). Cleared by cachereg.release_caches.
-_SUFLCP_CACHE: dict = {}
-
-
 def staged_adjacent_lcps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    hit = _SUFLCP_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    from .layout_queries import _scratch
-
-    path = _scratch("suflcp_lcps", sf_dir)
-    suffix_adjacent_lcps(spark, sf_dir).write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    _SUFLCP_CACHE[key] = (spark, out)
-    return out
+    """One staged LCP array per session: the chain+lifting job runs once
+    and every aggregate branch of q_suffix_lcp reads the staged parquet —
+    without this the lifting lineage is COPIED into each of the five
+    consumer branches (measured 156 broadcast nodes in the un-staged plan
+    tree)."""
+    return memo(
+        spark,
+        ("suflcp_lcps", sf_dir),
+        lambda: stage(spark, "suflcp_lcps", sf_dir, suffix_adjacent_lcps(spark, sf_dir)),
+    )
 
 
 @declared("q_suffix_lcp", oracle=_suffix_lcp_oracle())

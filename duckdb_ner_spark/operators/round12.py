@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.cachereg import stage
 from ..plans.registry import declared
 from ..sources.catalog import load_tables
 from .similarity import FX_SCALE, _unit_fx_expr
@@ -412,11 +413,7 @@ def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus is hashed once and both halves scan the narrow (ids, pk,
     # pos) summary. Bit-exact round-trip (BIGINT + digest strings) —
     # hashes re-attested at all 3 SFs.
-    from .layout_queries import _scratch
-
-    pos_path = _scratch("blm_pos", sf_dir)
-    pos.write.mode("overwrite").parquet(pos_path)
-    pos = spark.read.parquet(pos_path)
+    pos = stage(spark, "blm_pos", sf_dir, pos)
     filt = pos.filter(F.col("half") == 0).select("pos").distinct()
     fill = filt.agg(
         F.count("*").cast("bigint").alias("n_bits_set")
@@ -1966,11 +1963,7 @@ def q_topk_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus is read once and every branch scans the vocab-sized
     # (source, w, cnt) BIGINT summary. Bit-exact round-trip (BIGINT +
     # strings only) — hashes re-attested at all 3 SFs.
-    from .layout_queries import _scratch
-
-    wc_path = _scratch("tkb_wc", sf_dir)
-    wc.write.mode("overwrite").parquet(wc_path)
-    wc = spark.read.parquet(wc_path)
+    wc = stage(spark, "tkb_wc", sf_dir, wc)
     sw = Window.partitionBy("source")
     ranked = wc.select(
         "source",

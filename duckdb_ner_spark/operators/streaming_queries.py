@@ -615,12 +615,13 @@ def q_stream_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from ..plans.cachereg import scratch_path
     from ..sources.catalog import load_tables
     from .multimodal import decode_image, ppm_sample, stage_ppm_files
-    from .sources_queries import BINFILE_STEP, _scratch
+    from .sources_queries import BINFILE_STEP
 
     t_docs = load_tables(spark, sf_dir).documents
-    path = _scratch("stream_ppm", sf_dir)
+    path = scratch_path("stream_ppm", sf_dir)
     os.makedirs(path, exist_ok=True)
     stage_ppm_files(ppm_sample(t_docs, BINFILE_STEP), path)
 

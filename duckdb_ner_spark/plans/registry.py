@@ -7,8 +7,9 @@ string (``ORACLES[name]``). The driver hash-compares the two at sf0.01
 sorts columns by name before hashing.
 
 Plan cache: re-invoking a declared query with the same (session, sf_dir)
-returns the previously constructed DataFrame — the Spark analogue of a
-prepared statement. Building a DataFrame costs Py4J round trips plus
+returns the previously constructed DataFrame (a ``cachereg.memo`` entry,
+so the scan conf is part of the key) — the Spark analogue of a prepared
+statement. Building a DataFrame costs Py4J round trips plus
 analyzer work on the driver (measured 40-250 ms per headline query,
 tools/bench_profile.py); the logical plan it yields is deterministic given
 the session and data directory, so re-paying that per invocation is pure
@@ -27,22 +28,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .cachereg import drop_memos, memo
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# (name, sf_dir, scan-conf) -> (session, DataFrame); session compared by
-# identity so a restarted/replaced SparkSession never serves another
-# session's plan. The scanRepartition conf is part of the key because it is
-# the one session conf that changes the SHAPE of a built plan (catalog-level
-# repartition) rather than how it executes — mirroring _DF_CACHE's key in
-# sources/catalog.py.
-_PLAN_CACHE: dict[tuple[str, str, str], tuple[SparkSession, DataFrame]] = {}
-
 
 def clear_plan_cache() -> None:
-    _PLAN_CACHE.clear()
+    drop_memos("plan")
 
 
 def assert_hashable_schema(df: DataFrame, name: str) -> None:
@@ -84,14 +79,7 @@ def declared(
         if cache_plan:
 
             def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                scan = spark.conf.get("spark.duckdb_ner.scanRepartition", "0")
-                key = (name, sf_dir, scan)
-                hit = _PLAN_CACHE.get(key)
-                if hit is not None and hit[0] is spark:
-                    return hit[1]
-                df = fn(spark, sf_dir)
-                _PLAN_CACHE[key] = (spark, df)
-                return df
+                return memo(spark, ("plan", name, sf_dir), lambda: fn(spark, sf_dir))
 
             cached.__name__ = fn.__name__
             cached.__doc__ = fn.__doc__

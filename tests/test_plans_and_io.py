@@ -328,15 +328,25 @@ def test_record_linkage_plan_has_no_joins(spark):
         clear_plan_cache()
 
 
-def test_label_prop_one_exchange_per_round(spark):
+def test_label_prop_one_exchange_per_round(spark, monkeypatch):
     """r14: the pivoted vote argmax aggregates ONCE per propagation round
     (a count column per label + greatest/CASE argmax) — the retired
     (node,lbl)-keyed count + (node)-keyed max_by pair cost two. max_by must
-    not reappear anywhere in the optimized propagation plan."""
+    not reappear anywhere in the optimized propagation plan, and each extra
+    round must add exactly one exchange (its vote aggregate) once the
+    persisted graph is materialized and both per-round joins broadcast."""
+    from duckdb_ner_spark.operators import round7
     from duckdb_ner_spark.operators.components import day1_cooccurrence_graph
-    from duckdb_ner_spark.operators.round7 import label_prop_labels
+    from duckdb_ner_spark.plans.inspect import plan_report
 
     edges, deg = day1_cooccurrence_graph(spark, SF_SMOKE)
-    lab = label_prop_labels(edges, deg)
+    edges.count(), deg.count()  # real cached sizes drive the join choice
+    lab = round7.label_prop_labels(edges, deg)
     plan = lab._jdf.queryExecution().optimizedPlan().toString()
     assert "max_by" not in plan.lower()
+    n_exchanges = {}
+    for iters in (1, 2):
+        monkeypatch.setattr(round7, "LP_ITERS", iters)
+        lab = round7.label_prop_labels(edges, deg)
+        n_exchanges[iters] = plan_report(lab).n_exchanges
+    assert n_exchanges[2] - n_exchanges[1] == 1, n_exchanges

@@ -13,6 +13,7 @@ import pandas as pd
 import duckdb_ner_spark.operators  # noqa: F401 — populate the registry
 from duckdb_ner_spark.operators.round10 import (
     SSD_K,
+    staged_excise_spans,
     substring_excise_spans,
     substring_scrub,
 )
@@ -181,6 +182,24 @@ def test_q_substring_dedup_matches_python_recompute(spark):
             for r in sorted(got[d], key=lambda r: r.span_seq)
         ]
         assert spark_ivs == ivs, d
+
+
+def test_staged_spans_memo_keys_on_scan_conf(spark):
+    """The staged-span memo folds scanRepartition into its key, like the
+    plan cache: flipping the conf in one session builds a fresh frame
+    instead of serving one shaped under the old value, and the first
+    frame stays readable after the second is staged."""
+    conf = "spark.duckdb_ner.scanRepartition"
+    spark.conf.set(conf, "0")
+    first = staged_excise_spans(spark, SF_SMOKE)
+    spark.conf.set(conf, "-1")
+    try:
+        second = staged_excise_spans(spark, SF_SMOKE)
+    finally:
+        spark.conf.set(conf, "0")
+    assert second is not first
+    assert staged_excise_spans(spark, SF_SMOKE) is first
+    assert first.count() == second.count()
 
 def test_sparse_spans_subset_and_python_recompute(spark):
     """q_substring_sparse core properties at sf0.001: the sparse excise

@@ -187,8 +187,11 @@ def test_release_caches_leaves_zero_persistent_rdds(spark):
     persist-heavy queries in the corpus (LSH dedup, shared graph, iterative
     components with localCheckpoint rounds), release_caches() must leave
     ZERO persisted RDDs — and a re-run after release must still be correct
-    (persist is an optimization, never a correctness dependency)."""
+    (persist is an optimization, never a correctness dependency). The
+    session memo store must be empty after release, and a second session
+    object must never be served the first one's entries."""
     from duckdb_ner_spark.plans.cachereg import (
+        _STORES,
         persistent_rdd_count,
         release_caches,
     )
@@ -199,7 +202,7 @@ def test_release_caches_leaves_zero_persistent_rdds(spark):
     # q_substring_scrub: the staged-scratch idiom (r10) — release must
     # also drop the Python-side staged-frame memo, and a re-run restages.
     # q_suffix_rank: the staged suffix-rank chain (r11, sufr_p* scratch +
-    # _SUFR_ROUNDS_CACHE) — release drops the chain memo, a re-run
+    # its session memo) — release drops the chain memo, a re-run
     # restages all rounds into the same per-pid dirs (atexit-cleaned).
     for q in (
         "q_dedup_near",
@@ -211,8 +214,13 @@ def test_release_caches_leaves_zero_persistent_rdds(spark):
     ):
         before[q] = len(QUERIES[q](spark, sf).collect())
     assert persistent_rdd_count(spark) > 0  # the queries really do persist
+    other = spark.newSession()
+    assert other not in _STORES
+    assert QUERIES["q_triangles"](other, sf) is not QUERIES["q_triangles"](spark, sf)
+    assert _STORES[spark]
     release_caches(spark)
     assert persistent_rdd_count(spark) == 0
+    assert not _STORES[spark] and not _STORES[other]
     for q, n in before.items():
         assert len(QUERIES[q](spark, sf).collect()) == n, q
     release_caches(spark)

@@ -204,6 +204,20 @@ def test_record_linkage_matches_python_recompute(spark):
     assert any(v[1] > 0 for v in got.values()), "need multi-record blocks"
 
 
+def test_cap_rejects_salt_off_the_struct_key(spark):
+    """A struct id carried through the cap must salt on its FIRST field
+    (struct order == key order); salting on any other field is refused."""
+    import pytest
+
+    from duckdb_ner_spark.operators.caps import capped_bucket_id_arrays
+
+    bands = spark.createDataFrame(
+        [(0, "a", 1, "x")], "band int, sig string, k long, n string"
+    ).select("band", "sig", F.struct("n", "k").alias("rec"))
+    with pytest.raises(AssertionError, match="FIRST field"):
+        capped_bucket_id_arrays(bands, "rec", 4, salt_on=F.col("rec.k"))
+
+
 def test_bpe_apply_consistent_with_bpe_merges(spark):
     """Internal cross-check: the corpus-wide BPE token total after the
     final learned merge must equal q_bpe_merges' own n_tokens_after for

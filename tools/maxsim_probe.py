@@ -42,9 +42,9 @@ def _tree_bytes(path: str) -> int:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from duckdb_ner_spark.operators.layout_queries import _scratch
     from duckdb_ner_spark.operators.round12 import maxsim_slice_units
     from duckdb_ner_spark.operators.round13 import MR_LEVELS, MR_M, MR_NQ
+    from duckdb_ner_spark.plans.cachereg import scratch_path
     from duckdb_ner_spark.session import get_spark
     from duckdb_ner_spark.sources.catalog import load_tables
 
@@ -54,7 +54,7 @@ def main() -> None:
     n_vec = t.embeddings.count()
 
     su = maxsim_slice_units(t.embeddings)
-    su_path = _scratch("probe_su", sf_dir)
+    su_path = scratch_path("probe_su", sf_dir)
     su.write.mode("overwrite").parquet(su_path)
     su = spark.read.parquet(su_path)
 
@@ -74,7 +74,7 @@ def main() -> None:
             f" + 0.5) AS BIGINT))"
         ).alias("c8"),
     )
-    c8_path = _scratch("probe_c8", sf_dir)
+    c8_path = scratch_path("probe_c8", sf_dir)
     c8.write.mode("overwrite").parquet(c8_path)
     c8 = spark.read.parquet(c8_path)
 
